@@ -42,6 +42,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.functions.audio import audio_snr_ok  # noqa: E402
+from jsonschema_spark.operators.validate import explode_violations  # noqa: E402
 from jsonschema_spark.plans.compile import CompileOptions  # noqa: E402
 from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, CLIPS_SCHEMA, synth_clips  # noqa: E402
 from jsonschema_spark.streaming.validate import annotate_stream  # noqa: E402
@@ -81,9 +82,9 @@ def main(argv=None) -> int:
     stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(args.input)
     ann = annotate_stream(stream, CLIPS_JSON_SCHEMA, opts)
 
-    viol = ann.filter(~F.col("_valid")).select(
-        "clip_id", F.explode("_violations").alias("_v")
-    ).select("clip_id", "_v.keyword_path", "_v.keyword", "_v.column", "_v.message")
+    viol = explode_violations(ann.filter(~F.col("_valid")), "clip_id").select(
+        "clip_id", "_v.keyword_path", "_v.keyword", "_v.column", "_v.message"
+    )
     q_viol = (
         viol.writeStream.format("parquet")
         .option("path", os.path.join(args.out, "violations"))

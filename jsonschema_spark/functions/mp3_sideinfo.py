@@ -27,6 +27,9 @@ Validation (exact error@frame strings):
   used" in Table B.7; no codebook exists).
 - big_values_overflow@k — big_values > 288 (2*big_values spectral
   lines must fit the 576-line granule).
+- part2_overflow@k — MPEG-1 only: the scalefactor bits implied by
+  scalefac_compress, the block shape and scfsi exceed the granule's
+  part2_3_length (LSF's slen scheme is not accounted).
 - reservoir_underflow@k — main_data_begin points back past the start
   of the accumulated main-data area: the byte-slice signature of a
   stream cut at a non-clean point (the reservoir was not flushed).

@@ -28,7 +28,7 @@ from typing import Mapping, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.validate import ValidationResult
+from jsonschema_spark.operators.validate import ValidationResult, annotate
 from jsonschema_spark.plans.compile import CompileOptions, compile_schema
 from jsonschema_spark.schema import Schema
 
@@ -93,10 +93,7 @@ def validate_dispatch(
         routed = F.when(cond, arr) if routed is None else routed.when(cond, arr)
     routed = routed.otherwise(fallback)
 
-    annotated = df.withColumn("_violations", routed).withColumn(
-        "_valid", F.size("_violations") == 0
-    )
     envelope = compile_schema(
         _parse({"$id": envelope_id}), df.schema, options
     )
-    return ValidationResult(annotated=annotated, compiled=envelope)
+    return ValidationResult(annotated=annotate(df, routed), compiled=envelope)

@@ -3,9 +3,10 @@
 Spark-first design notes (scale: 10^12 rows / 1000 executors):
 - Every check is a boolean Column expression -> single scan, whole-stage
   codegen, zero shuffles for the violation pass.
-- The violations DataFrame is built with array+filter+explode so only
-  failing rows materialize structs; passing rows cost one codegen'd
-  boolean vector each.
+- The violations DataFrame is built with array+explode so only failing
+  rows materialize structs; passing rows cost one codegen'd boolean
+  vector each. Every explode goes through ``explode_violations`` so the
+  array is evaluated once per row.
 - The per-partition summary aggregates by ``spark_partition_id`` —
   partial aggregation happens map-side; the shuffle carries one row per
   (partition, check outcome), i.e. O(partitions), not O(rows).
@@ -75,6 +76,29 @@ def _schema_location_chain(ptr: str) -> list[str]:
     return units
 
 
+def annotate(df: DataFrame, violations_array: Column) -> DataFrame:
+    """``df`` plus ``_violations`` (the check array) and ``_valid`` — the one
+    annotation every batch, streaming and dispatch plan is built from."""
+    return df.withColumn("_violations", violations_array).withColumn(
+        "_valid", F.size("_violations") == 0
+    )
+
+
+def explode_violations(annotated: DataFrame, *cols: str | Column) -> DataFrame:
+    """``cols`` plus ``_v``: one row per element of ``_violations``; rows
+    without violations drop out.
+
+    A plain ``explode`` of the column lets Catalyst infer a
+    ``size(_violations) > 0`` filter below the Generate, and pushdown then
+    inlines the whole check array (and the JSON parse under it) into that
+    filter, so every row is checked twice. ``explode_outer`` infers no
+    filter, and the null filter on its output cannot move below it. Every
+    element is a non-null struct, so the rows equal those of ``explode``."""
+    return annotated.select(
+        *cols, F.explode_outer("_violations").alias("_v")
+    ).filter(F.col("_v").isNotNull())
+
+
 @dataclass
 class ValidationResult:
     annotated: DataFrame  # input + _valid boolean + _violations array
@@ -83,7 +107,7 @@ class ValidationResult:
     def violations(self, key_cols: Sequence[str]) -> DataFrame:
         """(key..., keyword_path, keyword, column, message) — one row per
         violated constraint per input row. Explode drops clean rows."""
-        v = self.annotated.select(*key_cols, F.explode("_violations").alias("_v"))
+        v = explode_violations(self.annotated, *key_cols)
         return v.select(*key_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLS])
 
     def summary(self) -> DataFrame:
@@ -255,9 +279,8 @@ class ValidationResult:
         min/max rather than collect_set samples on purpose: aggregation
         state stays O(1) per group at 10^12 rows (collect_set would buffer
         every distinct key before any cap applied)."""
-        base = self.annotated.select(
-            F.explode("_violations").alias("_v"),
-            *([F.col(key_col).alias("_k")] if key_col else []),
+        base = explode_violations(
+            self.annotated, *([F.col(key_col).alias("_k")] if key_col else [])
         )
         sel = base.select(
             *[F.col(f"_v.{c}").alias(c) for c in ("keyword_path", "keyword", "column")],
@@ -305,7 +328,7 @@ class ValidationResult:
         from jsonschema_spark.operators.uniqueness import salt_column
 
         grp = ["keyword_path", "keyword", "column"]
-        v = self.annotated.select(*key_cols, F.explode("_violations").alias("_v"))
+        v = explode_violations(self.annotated, *key_cols)
         flat = v.select(
             *[F.col(f"_v.{c}").alias(c) for c in grp],
             *key_cols,
@@ -351,7 +374,7 @@ class ValidationResult:
         Same plan shape as ``violations()`` — explode of the codegen'd
         violations array, no extra scan, no shuffle."""
         root_id = self.compiled.schema.id
-        v = self.annotated.select(*key_cols, F.explode("_violations").alias("_v"))
+        v = explode_violations(self.annotated, *key_cols)
         kw_loc = F.col("_v.keyword_path")
         abs_loc = (
             F.concat(F.lit(root_id), F.lit("#"), kw_loc)
@@ -448,9 +471,7 @@ class ValidationResult:
                     )
         parent_map = F.create_map(*parent_items)
 
-        v = self.annotated.select(
-            *key_cols, F.explode("_violations").alias("_v")
-        ).select(
+        v = explode_violations(self.annotated, *key_cols).select(
             *key_cols,
             F.element_at(anc_map, F.col("_v.keyword_path")).alias("_anc"),
         )
@@ -589,10 +610,9 @@ def validate(
     elif isinstance(schema, dict):
         schema = Schema.from_value(schema)
     compiled = compile_schema(schema, df.schema, options, resolve_config)
-    annotated = df.withColumn("_violations", compiled.violations_array()).withColumn(
-        "_valid", F.size("_violations") == 0
+    return ValidationResult(
+        annotated=annotate(df, compiled.violations_array()), compiled=compiled
     )
-    return ValidationResult(annotated=annotated, compiled=compiled)
 
 
 def violations(

@@ -1178,16 +1178,19 @@ class _Compiler:
             else:
                 collect(expr)
 
+        # schema_of_variant spells out the type of the WHOLE nested value,
+        # so it only gates scalars; object/array gates are the casts that
+        # succeed exactly on those kinds
         sov = F.schema_of_variant(col)
         v_num = sov.rlike(self._V_NUM_SOV)
         v_str = sov == "STRING"
         v_bool = sov == "BOOLEAN"
         v_null = sov == "VOID"
-        v_arr = sov.rlike("^ARRAY")
-        v_obj = sov.rlike("^OBJECT")
         num = F.try_variant_get(col, "$", "double")
         sval = F.try_variant_get(col, "$", "string")
         arr = F.try_variant_get(col, "$", "array<variant>")
+        v_arr = arr.isNotNull()
+        v_obj = F.try_variant_get(col, "$", "struct<>").isNotNull()
 
         def type_pred(t: str) -> Column:
             if t == "integer":

@@ -23,7 +23,11 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.validate import VIOLATION_COLS
+from jsonschema_spark.operators.validate import (
+    VIOLATION_COLS,
+    annotate,
+    explode_violations,
+)
 from jsonschema_spark.plans.compile import CompileOptions, compile_schema
 from jsonschema_spark.resolve import ResolveConfig
 from jsonschema_spark.schema import Schema
@@ -47,9 +51,7 @@ def annotate_stream(
 
     Identical semantics to the batch ``validate(...).annotated``."""
     compiled = _compile(stream, schema, options, resolve_config)
-    return stream.withColumn("_violations", compiled.violations_array()).withColumn(
-        "_valid", F.size("_violations") == 0
-    )
+    return annotate(stream, compiled.violations_array())
 
 
 def stream_violations(
@@ -61,7 +63,7 @@ def stream_violations(
     """Streaming violation rows (key..., keyword_path, keyword, column,
     message) — stateless explode, safe for append-mode sinks."""
     ann = annotate_stream(stream, schema, options)
-    v = ann.select(*key_cols, F.explode("_violations").alias("_v"))
+    v = explode_violations(ann, *key_cols)
     return v.select(*key_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLS])
 
 

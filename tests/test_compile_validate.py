@@ -639,6 +639,35 @@ def test_variant_mixed_enum_and_const(spark):
     assert v == {5: {"enum"}, 6: {"enum"}}
 
 
+def test_variant_object_array_gates(spark):
+    """Object/array applicability on variants: empty containers keep their
+    kind, JSON null and scalars are neither, a nested object is an object,
+    and array keywords pass vacuously on everything that is not an array."""
+    df = spark.createDataFrame(
+        [
+            (1, "{}"), (2, "[]"), (3, "null"),
+            (4, '{"a": {"b": [1, {"c": 2}]}}'), (5, "[1, [2, 3]]"),
+            (6, "7"), (7, '"s"'), (8, None),
+        ],
+        "rid long, js string",
+    ).select("rid", F.parse_json("js").alias("v"))
+
+    def violated(sub):
+        return _violated(validate(df, {"properties": {"v": sub}}), "rid")
+
+    assert violated({"type": "object"}) == {
+        r: {"type"} for r in (2, 3, 5, 6, 7)
+    }
+    assert violated({"type": "array", "maxItems": 1}) == {
+        1: {"type"}, 3: {"type"}, 4: {"type"}, 5: {"maxItems"},
+        6: {"type"}, 7: {"type"},
+    }
+    assert violated({"type": ["object", "array"]}) == {
+        r: {"type"} for r in (3, 6, 7)
+    }
+    assert violated({"maxItems": 0}) == {5: {"maxItems"}}
+
+
 def test_dynamic_ref_recursive_tree(spark):
     """$dynamicRef lexical-scope subset: a recursive meta-schema-style
     document evaluates with bounded unroll, exactly like a cyclic $ref

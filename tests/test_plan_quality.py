@@ -145,6 +145,38 @@ def test_variant_validation_stays_jvm_side(spark):
     assert "BatchEvalPython" not in p
 
 
+@pytest.mark.parametrize(
+    "output",
+    ["violations", "by_keyword", "examples", "basic_output_units",
+     "detailed_output_units", "verbose_output_units", "stream_violations"],
+)
+def test_check_array_evaluated_once_per_row(spark, tmp_path, output):
+    """Every output derived from ``_violations`` evaluates the check array,
+    and the JSON parse under it, once per row. A plain explode of the
+    array lets Catalyst infer ``size(_violations) > 0`` and push it, with
+    the whole array and parse inlined, into a Filter at the scan — every
+    row was then parsed and checked twice. ``stream_violations`` is
+    checked through its batch twin (same operators on a static frame)."""
+    from jsonschema_spark.sources import jsonl as J
+    from jsonschema_spark.streaming.validate import stream_violations
+
+    path = tmp_path / "docs.jsonl"
+    path.write_text("\n".join(J.synth_jsonl_lines(26)) + "\n")
+    frame = J.read_jsonl(spark, str(path)).select(
+        J.doc_id_col().alias("doc_id"), "doc", "raw"
+    )
+    if output == "stream_violations":
+        df = stream_violations(frame, J.JSONL_DOC_SCHEMA, ["doc_id"])
+    else:
+        res = validate(frame, J.JSONL_DOC_SCHEMA)
+        arg = "doc_id" if output == "by_keyword" else ["doc_id"]
+        df = getattr(res, output)(arg)
+    p = plan(df)
+    pushed = [ln for ln in p.splitlines() if "Filter" in ln and "concat(" in ln]
+    assert not pushed, pushed
+    assert p.count("parseJson") == 1
+
+
 def test_partitioned_table_prunes_partitions(spark, tmp_path):
     """Hive/Iceberg-style partition layout: a codec filter must become a
     partition filter (pruned at planning), not a post-scan predicate —
